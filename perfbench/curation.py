@@ -2,18 +2,25 @@
 operators over a corpus where every document has nine exact duplicates.
 
 Seeded base tables (``documents`` and ``embeddings``, sf0.01 sizes) are
-generated, then replicated ten times with shifted ids the way
+generated with the shape measured on the sf0.01 test data (``SF001``),
+then replicated ten times with shifted ids the way
 ``tools/make_sf_replica.py`` builds its replicas. That makes 5,000
 documents in 500 ten-document cliques, the input on which the near-dup
 posting lists grow ten-fold. One client runs the queries back to back;
 each result is materialized with a ``noop`` write, never ``count()``.
+
+``python3 perfbench/curation.py DIR...`` prints the corpus statistics of
+each directory's ``documents.parquet``, the figures ``SF001`` records.
 """
 
 from __future__ import annotations
 
+import itertools
+import json
 import math
 import os
 import random
+import statistics
 import sys
 import threading
 import time
@@ -42,28 +49,56 @@ WARM_BASE_DOCS = 50
 DIM = 64
 #: passes a run makes at least, whatever ``--seconds`` says
 MIN_PASSES = 2
+#: per-layer metrics of layers this workload does not run (it reads no
+#: stream and writes no sink); a traced run reports them as 0
+NOT_RUN = ("sources.", "operators.", "sinks.", "pipeline.")
 
-_VOCAB = (
-    "stream batch window merge join key value table row column query scan "
-    "filter sort hash agg group order part line spark data vector fast slow "
-    "big small the a customer index"
+#: ``corpus_stats`` of the sf0.01 test data's ``documents``, which the
+#: generator reproduces: 30 words drawn uniformly (each 3.1-3.6% of all
+#: tokens), 10-99 tokens per text, 5% near-duplicates (another
+#: document's text plus the word "dup"), no exact duplicates
+SF001 = {
+    "docs": 500,
+    "distinct_text_share": 1.0,
+    "vocabulary": 31,
+    "tokens_min": 10,
+    "tokens_mean": 54.33,
+    "tokens_max": 99,
+    "near_dup_share": 0.05,
+    "distinct_3shingle_share": 0.6216,
+    "distinct_4shingle_share": 0.9399,
+    "lang_en_share": 0.436,
+}
+VOCAB = (
+    "a agg batch big column customer data fast filter group hash join key line "
+    "merge order part query row scan slow small sort spark stream table the value "
+    "vector window"
 ).split()
-_LANGS = ["en"] * 5 + ["de", "es", "fr", "zh"]
+TOKENS = (10, 99)
+NEAR_DUP_SHARE = 0.05
+#: language weights: en three times as frequent as each other language
+LANGS = ["en"] * 3 + ["de", "es", "fr", "zh"]
+SOURCES = 20
 
 
 def make_base(d: str, seed: int, n: int) -> None:
     """Seeded ``documents`` and ``embeddings`` tables with the testdata
-    schemas: short texts over a small vocabulary, unit vectors."""
+    schemas and the sf0.01 shape (``SF001``): uniform words and text
+    lengths, near-duplicates made by copying another text and appending
+    "dup" (in random order, so a copy may be copied again), sources
+    round-robin, unit-length Gaussian vectors with uniform labels."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     rng = random.Random(seed)
-    texts = [" ".join(rng.choice(_VOCAB) for _ in range(rng.randint(8, 100))) for _ in range(n)]
+    texts = [" ".join(rng.choice(VOCAB) for _ in range(rng.randint(*TOKENS))) for _ in range(n)]
+    for i in rng.sample(range(n), round(n * NEAR_DUP_SHARE)):
+        texts[i] = texts[rng.choice([j for j in range(n) if j != i])] + " dup"
     docs = pa.table({
         "doc_id": pa.array(range(n), pa.int64()),
         "text": texts,
-        "lang": [rng.choice(_LANGS) for _ in range(n)],
-        "source": [f"src{rng.randrange(20)}" for _ in range(n)],
+        "lang": [rng.choice(LANGS) for _ in range(n)],
+        "source": [f"src{i % SOURCES}" for i in range(n)],
         "n_chars": pa.array([len(t) for t in texts], pa.int64()),
     })
     vecs = []
@@ -79,6 +114,36 @@ def make_base(d: str, seed: int, n: int) -> None:
     os.makedirs(d, exist_ok=True)
     pq.write_table(docs, os.path.join(d, "documents.parquet"))
     pq.write_table(emb, os.path.join(d, "embeddings.parquet"))
+
+
+def corpus_stats(d: str) -> dict:
+    """The shape of ``d/documents.parquet`` that the near-dup operators'
+    costs depend on: vocabulary, text lengths, duplicate shares and the
+    share of distinct word n-grams (distinct n-grams of the corpus over
+    the sum of each document's distinct n-grams)."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(os.path.join(d, "documents.parquet"), columns=["text", "lang"])
+    texts = t.column("text").to_pylist()
+    toks = [x.split(" ") for x in texts]
+    lens = [len(x) for x in toks]
+
+    def shingle_share(n: int) -> float:
+        per_doc = [{tuple(x[i:i + n]) for i in range(len(x) - n + 1)} for x in toks]
+        return round(len(set().union(*per_doc)) / sum(len(p) for p in per_doc), 4)
+
+    return {
+        "docs": len(texts),
+        "distinct_text_share": round(len(set(texts)) / len(texts), 4),
+        "vocabulary": len({w for x in toks for w in x}),
+        "tokens_min": min(lens),
+        "tokens_mean": round(sum(lens) / len(lens), 2),
+        "tokens_max": max(lens),
+        "near_dup_share": round(sum(x.endswith(" dup") for x in texts) / len(texts), 4),
+        "distinct_3shingle_share": shingle_share(3),
+        "distinct_4shingle_share": shingle_share(4),
+        "lang_en_share": round(t.column("lang").to_pylist().count("en") / len(texts), 4),
+    }
 
 
 def make_replica(src: str, dst: str, copies: int) -> None:
@@ -261,14 +326,15 @@ def warm_up(spark, run_dir: str, inputs: dict, trace: bool) -> float:
 # --- measured passes ----------------------------------------------------------------
 
 
-def one_pass(spark, inputs, fns, pass_no, tracer, probes) -> dict:
+def one_pass(spark, inputs, fns, pass_no, tracer, probes, writes) -> dict:
     """Construct and materialize every query once, in the seeded order.
+    ``writes`` numbers the run's ``noop`` writes, which is how the
+    query-execution listener's events are matched to queries.
     ``probes`` (traced passes only) adds py4j counts, eager-job counts
     and session storage after each query."""
     sc = spark.sparkContext
     rec: dict = {"queries": {}, "errors": {}, "dfs": {}}
     t_pass = time.perf_counter()
-    start = time.time()
     for name in inputs["order"]:
         trace_id = f"{name}#{pass_no}"
         try:
@@ -284,12 +350,13 @@ def one_pass(spark, inputs, fns, pass_no, tracer, probes) -> dict:
                         eager = len(sc.statusTracker().getJobIdsForGroup(trace_id))
                 t1 = time.perf_counter()
                 with tracer.span("write", trace_id):
+                    write_no = next(writes)
                     df.write.format("noop").mode("overwrite").save()
                 t2 = time.perf_counter()
         except Exception as e:  # a failed query is a failed operation
             rec["errors"][name] = f"{type(e).__name__}: {str(e)[:200]}"
             continue
-        q = {"construct_s": t1 - t0, "write_s": t2 - t1, "latency_s": t2 - t0}
+        q = {"construct_s": t1 - t0, "write_s": t2 - t1, "latency_s": t2 - t0, "write_no": write_no}
         if probes is not None:
             q.update(py4j_calls=calls(), eager_jobs=eager, **session_storage(spark))
         rec["queries"][name] = q
@@ -297,7 +364,6 @@ def one_pass(spark, inputs, fns, pass_no, tracer, probes) -> dict:
     if probes is not None:
         sc.setLocalProperty("spark.jobGroup.id", None)
     rec["pass_s"] = time.perf_counter() - t_pass
-    rec["start"], rec["end"] = start, time.time()
     return rec
 
 
@@ -309,6 +375,7 @@ def run(spark, run_dir: str, seed: int, seconds: float, trace: bool, sampler, in
         from spans import Py4jCounter, register_qe_recorder
 
         probes = {"py4j": Py4jCounter(spark), "qer": register_qe_recorder(spark)}
+    writes = itertools.count()
     passes: list[dict] = []
     t_end = time.perf_counter() + seconds
     with sampler:
@@ -318,15 +385,17 @@ def run(spark, run_dir: str, seed: int, seconds: float, trace: bool, sampler, in
             # of a warming JVM, as the traced passes come later)
             traced = trace and len(passes) % 2 == 1
             tracer.enabled = traced
-            p = one_pass(spark, inputs, fns, len(passes), tracer, probes if traced else None)
+            p = one_pass(spark, inputs, fns, len(passes), tracer, probes if traced else None, writes)
             tracer.enabled = False
             p["traced"] = traced
             passes.append(p)
-            if len(passes) > 1:  # only the first and last passes' results are checked
-                first = passes[-2].pop("dfs")
-                if len(passes) == 2:
-                    fingerprints = {n: fingerprint(df) for n, df in first.items()}
+            if len(passes) > 2:  # only the first and last passes' results are checked
+                passes[-2].pop("dfs")
 
+    # outside the measured region: the first and the last pass's results
+    # must have the same fingerprints
+    t_check = time.perf_counter()
+    fingerprints = {n: fingerprint(df) for n, df in passes[0].pop("dfs").items()}
     problems, failed = [], 0
     attempted = sum(len(p["queries"]) + len(p["errors"]) for p in passes) + len(QUERIES)
     for p in passes:
@@ -340,6 +409,7 @@ def run(spark, run_dir: str, seed: int, seconds: float, trace: bool, sampler, in
         if fingerprint(df) != fingerprints.get(name):
             failed += 1
             problems.append(f"{name}: fingerprint differs between the first and the last pass")
+    check_s = time.perf_counter() - t_check
 
     lat = [q["latency_s"] for p in passes for q in p["queries"].values()]
     query_s = {
@@ -348,10 +418,15 @@ def run(spark, run_dir: str, seed: int, seconds: float, trace: bool, sampler, in
         if any(q in p["queries"] for p in passes)
     }
     pass_times = [p["pass_s"] for p in passes if not p["errors"]]
+    per_query = sorted(query_s.values())
     e2e = {
-        # the median query: eight queries of very different cost put the
-        # median of all samples on a cliff between two of them
-        "latency_p50_s": median(list(query_s.values())) if query_s else None,
+        # percentiles of the per-query medians: eight queries of very
+        # different cost put the percentiles of all samples on a cliff
+        # between two of them, and a pass has too few samples for a p99
+        "latency_p50_s": median(per_query) if per_query else None,
+        "latency_p99_s": (
+            statistics.quantiles(per_query, n=100, method="inclusive")[98] if len(per_query) > 1 else None
+        ),
         "pass_s": median(pass_times) if pass_times else None,
     }
     detail = {
@@ -363,6 +438,7 @@ def run(spark, run_dir: str, seed: int, seconds: float, trace: bool, sampler, in
         "pass_s_all": [round(p["pass_s"], 4) for p in passes],
         "query_s": query_s,
         "fingerprints": fingerprints,
+        "check_s": round(check_s, 4),
         "latency_samples": len(lat),
         "latency_p90_s": percentile(lat, 90),
     }
@@ -373,38 +449,35 @@ def run(spark, run_dir: str, seed: int, seconds: float, trace: bool, sampler, in
     }
     if trace:
         out["tracer"] = tracer
-        out["passes"] = passes
-        out["qer"] = probes["qer"]
         out["trace_records"] = [
             {"kind": "pass", "pass": i, **{k: v for k, v in p.items() if k != "errors"}}
             for i, p in enumerate(passes)
         ]
+        out["finish_trace"] = lambda stages, jobs: query_layers(passes, probes["qer"], next(writes), stages)
     return out
 
 
-def query_layers(out: dict, stages: list[dict]) -> dict:
-    """Per traced pass sums, median over traced passes."""
-    passes = out["passes"]
+def query_layers(passes: list[dict], qer, n_writes: int, stages: list[dict]) -> dict:
+    """Per traced pass sums, median over traced passes. The Catalyst and
+    execution times are those of each query's own ``noop`` write."""
     traced = [p for p in passes if p["traced"]]
     untraced = [p for p in passes if not p["traced"]]
-    events = out["qer"].wait_for(0)
+    writes = qer.wait_for(n_writes, func="overwrite")
 
     def per_pass(fn):
         return median([fn(p) for p in traced]) if traced else 0.0
 
-    def window(p):
-        return [e for e in events if p["start"] <= e["at"] <= p["end"] + 1.0]
+    def write_sum(p, key):
+        return sum(writes[q["write_no"]].get(key, 0) for q in p["queries"].values() if q["write_no"] < len(writes))
 
     layers = {
         "plans.construct_s": per_pass(lambda p: sum(q["construct_s"] for q in p["queries"].values())),
         "plans.eager_jobs": per_pass(lambda p: sum(q["eager_jobs"] for q in p["queries"].values())),
         "plans.py4j_calls": per_pass(lambda p: sum(q["py4j_calls"] for q in p["queries"].values())),
-        "exec.execute_s": per_pass(
-            lambda p: sum(e["execute_s"] for e in window(p) if e.get("func") == "overwrite")
-        ),
+        "exec.execute_s": per_pass(lambda p: write_sum(p, "execute_s")),
     }
     for ph in ("analysis", "optimization", "planning"):
-        layers[f"catalyst.{ph}_ms"] = per_pass(lambda p, ph=ph: sum(e.get(f"{ph}_ms", 0) for e in window(p)))
+        layers[f"catalyst.{ph}_ms"] = per_pass(lambda p, ph=ph: write_sum(p, f"{ph}_ms"))
     groups = [stage_totals([s for s in stages if (s["group"] or "").endswith(f"#{passes.index(p)}")])
               for p in traced]
     for k in ("tasks", "stages", "shuffle_write_bytes", "shuffle_records", "spill_bytes", "executor_cpu_s"):
@@ -417,3 +490,8 @@ def query_layers(out: dict, stages: list[dict]) -> dict:
         if traced and untraced else 0.0
     )
     return layers
+
+
+if __name__ == "__main__":
+    for d in sys.argv[1:]:
+        print(json.dumps({"dir": d, **corpus_stats(d)}))

@@ -31,7 +31,7 @@ from progress import data_batches
 from spans import Tracer, session_storage, stage_totals
 
 #: records per second the generator appends
-RATE = 2000
+RATE = 8000
 #: the warm-up backlog: enough records to reach every code path of the
 #: four sinks, the many-partition Parquet write included
 WARMUP_RECORDS = 512
@@ -44,6 +44,8 @@ WARM_ID_BASE = 1 << 32
 TRACED_ID_BASE = 2 << 32
 #: pipeline sink name -> metric name
 SINKS = {"file": "file", "kinesis": "kinesis", "kafka": "kafka", "discarding": "noop"}
+#: this workload runs every layer a traced run reports
+NOT_RUN = ()
 
 
 def pipeline_args(src: str, out: str) -> list[str]:
@@ -59,17 +61,6 @@ def pipeline_args(src: str, out: str) -> list[str]:
         "--OutputDiscarding", "true",
         "--CheckpointLocation", os.path.join(out, "ckpt"),
     ]
-
-
-def drain(spark, src: str, out: str):
-    """Run the four-sink pipeline over everything in ``src`` and stop."""
-    from amazon_kinesis_analytics_streaming_etl_spark.plans.pipeline import Pipeline
-
-    q = Pipeline.from_config(spark, args=pipeline_args(src, out)).start(
-        available_now=True
-    )
-    q.awaitTermination()
-    return q
 
 
 # --- the stream: a warm-up backlog, then live phases -----------------------------
@@ -358,10 +349,13 @@ def run(spark, run_dir: str, seed: int, seconds: float, trace: bool, sampler, in
             )
 
     lat = latencies(live)
+    # one full pass over the phase's input: from its first scheduled
+    # record to the end of the micro-batch that delivered its last one
     span_s = max(b["end"] for b in live.batches) - live.start_at
     e2e = {
         "latency_p50_s": percentile(lat, 50),
-        "pass_s": median([b["durations"]["triggerExecution"] / 1000.0 for b in live.batches]),
+        "latency_p99_s": percentile(lat, 99),
+        "pass_s": span_s,
     }
     detail = {
         "rate_rps": RATE,
@@ -371,7 +365,6 @@ def run(spark, run_dir: str, seed: int, seconds: float, trace: bool, sampler, in
         "batch_s": [b["durations"]["triggerExecution"] / 1000.0 for b in live.batches],
         "batch_rows": [b["rows"] for b in live.batches],
         "latency_samples": len(lat),
-        "latency_p99_s": percentile(lat, 99),
         "throughput_rps": len(lat) / span_s,
         "records_behind_max": max(records_behind(live), default=0),
         "generator_max_late_s": live.max_late_s,
@@ -395,11 +388,15 @@ def run(spark, run_dir: str, seed: int, seconds: float, trace: bool, sampler, in
         for b in phase.batches
     ]
 
+    # the micro-batch that carries the traced phase: the phase's first
+    # record alone makes a batch of its own
+    big = max(traced.batches, key=lambda b: b["rows"])
+
     def finish(stages, jobs):
         qe_events = inputs["qer"].wait_for(0)
-        result = {"out": inputs["out"], "batches": traced.batches}
-        layers = pipeline_layers(result, tracer, qe_events, stages)
-        layers.update(file_sink_shape(inputs["out"], len(all_batches), observed_valid_rows(all_batches)))
+        layers = pipeline_layers([big], tracer, qe_events, stages)
+        file_span = next((s for s in tracer.named("sink.file") if s["trace_id"] == big["batch_id"]), None)
+        layers.update(file_sink_shape(inputs["out"], file_span, observed_valid_rows([big]) or 0))
         c, storage = inputs["construct"], inputs["storage"]
         layers.update({
             **_ladder_figures(lad),
@@ -494,33 +491,12 @@ def _ladder_figures(lad: dict) -> dict:
     }
 
 
-def ladder_layers(spark, run_dir: str, seed: int, tracer: Tracer):
-    """For a workload that runs no pipeline of its own: the ladder plus
-    one traced four-sink drain of the ladder batch. Returns a finisher
-    (stages, QE events) -> per-layer metrics, and correctness problems."""
-    lad = ladder(spark, run_dir, seed, tracer)
-    tracer.enabled = True
-    with instrumented(tracer, lambda batch_id: None):
-        q = drain(spark, lad["src"], os.path.join(run_dir, "ladder", "out"))
-    tracer.enabled = False
-    result = {"out": os.path.join(run_dir, "ladder", "out"), "batches": data_batches(q.recentProgress)}
-
-    def finish(stages, qe_events):
-        layers = pipeline_layers(result, tracer, qe_events, stages)
-        layers.update(file_sink_shape(result["out"], len(result["batches"]), lad["expected_valid"]))
-        layers.update(_ladder_figures(lad))
-        layers["sources.records_behind"] = 0
-        return layers
-
-    return finish, ladder_problems(lad)
-
-
 # --- per-layer metrics from a traced pipeline run --------------------------------
 
 
-def pipeline_layers(result: dict, tracer: Tracer, qe_events: list[dict], stages: list[dict]) -> dict:
-    """Per micro-batch medians over the traced batches of ``result``."""
-    batches = {b["batch_id"]: b for b in result["batches"]}
+def pipeline_layers(traced: list[dict], tracer: Tracer, qe_events: list[dict], stages: list[dict]) -> dict:
+    """Per micro-batch medians over the ``traced`` batches."""
+    batches = {b["batch_id"]: b for b in traced}
     fanouts = {s["trace_id"]: s for s in tracer.named("fanout") if s["trace_id"] in batches}
     sink_spans = [s for s in tracer.spans if s["name"].startswith("sink.")]
     ledger_spans = tracer.named("ledger.commit")
@@ -566,17 +542,19 @@ def pipeline_layers(result: dict, tracer: Tracer, qe_events: list[dict], stages:
                    ("pipeline.query_planning_ms", "queryPlanning"),
                    ("pipeline.wal_commit_ms", "walCommit"),
                    ("sources.latest_offset_ms", "latestOffset")):
-        out[key] = median([b["durations"].get(d, 0) for b in result["batches"]])
+        out[key] = median([b["durations"].get(d, 0) for b in traced])
     return out
 
 
-def file_sink_shape(out: str, n_batches: int, records: int) -> dict:
+def file_sink_shape(out: str, span: dict | None, records: int) -> dict:
+    """Parquet files the file sink published during ``span`` (its write of
+    one micro-batch of ``records`` valid records) and their bytes per record."""
     files = [
         fp for fp in glob.glob(os.path.join(out, "file", "**", "*.parquet"), recursive=True)
-        if "/_" not in fp[len(out):]
+        if "/_" not in fp[len(out):] and span and span["start"] <= os.path.getmtime(fp) <= span["end"]
     ]
     size = sum(os.path.getsize(f) for f in files)
     return {
-        "sinks.file.files_per_batch": len(files) / max(1, n_batches),
+        "sinks.file.files_per_batch": len(files),
         "sinks.file.bytes_per_record": size / max(1, records),
     }

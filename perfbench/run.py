@@ -100,13 +100,6 @@ def main(argv: list[str]) -> int:
             setups.append(time.perf_counter() - t0)
         warm_s = wl.warm_up(spark, run_dir, inputs, trace)
         res = wl.run(spark, run_dir, a.seed, a.seconds, trace, sampler, inputs)
-        if trace and a.workload != "etl_live":
-            import etl
-
-            finish_etl, ladder_problems = etl.ladder_layers(spark, run_dir, a.seed, res["tracer"])
-            res["check"]["attempted"] += 1
-            res["check"]["failed"] += 1 if ladder_problems else 0
-            res["check"]["problems"] += ladder_problems
         stop_spark(spark)
         spark = None
         detail = {
@@ -131,14 +124,10 @@ def main(argv: list[str]) -> int:
             from spans import read_event_log
 
             stages, jobs = read_event_log(os.path.join(run_dir, "eventlog"))
-            if a.workload == "etl_live":
-                layers = res["finish_trace"](stages, jobs)
-            else:
-                import curation
-
-                qe_events = res["qer"].wait_for(0)
-                layers = {**finish_etl(stages, qe_events), **curation.query_layers(res, stages)}
-            values, units = layers, _metric_units("per_layer")
+            units = _metric_units("per_layer")
+            layers = res["finish_trace"](stages, jobs)
+            layers.update({k: 0.0 for k in units if k.startswith(wl.NOT_RUN) and k not in layers})
+            values = layers
             trace_path = os.path.join(bench_root, f"trace-{a.workload}-s{a.seed}.jsonl")
             res["tracer"].write(
                 trace_path,

@@ -98,12 +98,17 @@ class QueryExecutionRecorder:
         with self._lock:
             self.events.append({"func": funcName, "at": time.time(), "failed": True})
 
-    def wait_for(self, n: int, timeout: float = 10.0) -> list[dict]:
+    def wait_for(self, n: int, timeout: float = 10.0, func: str | None = None) -> list[dict]:
+        """The events so far (only those of action ``func`` if given),
+        once there are ``n`` of them or ``timeout`` has passed."""
+        def matching() -> list[dict]:
+            with self._lock:
+                return [e for e in self.events if func is None or e["func"] == func]
+
         deadline = time.time() + timeout
-        while len(self.events) < n and time.time() < deadline:
+        while len(matching()) < n and time.time() < deadline:
             time.sleep(0.01)
-        with self._lock:
-            return list(self.events)
+        return matching()
 
     class Java:
         implements = ["org.apache.spark.sql.util.QueryExecutionListener"]

@@ -32,3 +32,18 @@ def test_replica_is_ten_exact_copies(tmp_path):
     assert texts == con.sql(
         f"SELECT count(DISTINCT text) FROM read_parquet('{tmp_path}/base/documents.parquet')"
     ).fetchone()[0]
+
+
+def test_generated_corpus_has_the_sf001_shape(tmp_path):
+    """The generator reproduces the measured sf0.01 statistics: same
+    vocabulary, length range and near-duplicate share, and n-gram
+    sharing within a few percent."""
+    curation.make_base(str(tmp_path), seed=5, n=curation.BASE_DOCS)
+    got, want = curation.corpus_stats(str(tmp_path)), curation.SF001
+    for k in ("docs", "vocabulary", "tokens_min", "near_dup_share"):
+        assert got[k] == want[k], k
+    assert want["tokens_max"] <= got["tokens_max"] <= want["tokens_max"] + 1  # a copy adds "dup"
+    assert got["distinct_text_share"] >= 0.99
+    assert abs(got["tokens_mean"] - want["tokens_mean"]) < 3
+    for k in ("distinct_3shingle_share", "distinct_4shingle_share", "lang_en_share"):
+        assert abs(got[k] - want[k]) < 0.03, k
