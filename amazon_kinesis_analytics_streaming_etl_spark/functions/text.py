@@ -63,15 +63,6 @@ def punct_ratio(text: Column | str) -> Column:
     return F.when(total > 0, punct.cast("double") / total.cast("double")).otherwise(0.0)
 
 
-def avg_word_length(text: Column | str) -> Column:
-    toks = whitespace_tokens(text)
-    n = F.size(toks)
-    total = F.aggregate(
-        F.transform(toks, F.length), F.lit(0), lambda acc, x: acc + x
-    )
-    return F.when(n > 0, total.cast("double") / n.cast("double")).otherwise(0.0)
-
-
 def lower_tokens(text: Column | str) -> Column:
     """The shared token array every scorer consumes: whitespace tokens of
     the lowercased text. Materialize this ONCE per row (``withColumn``)
@@ -87,11 +78,6 @@ def stopword_ratio_from_tokens(toks: Column, lang: str = "en") -> Column:
     hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
     n = F.size(toks)
     return F.when(n > 0, hits.cast("double") / n.cast("double")).otherwise(0.0)
-
-
-def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
-    """Fraction of tokens that are stopwords of ``lang``."""
-    return stopword_ratio_from_tokens(lower_tokens(text), lang)
 
 
 def detect_language_from_tokens(toks: Column) -> Column:
@@ -146,34 +132,6 @@ def fingerprint_md5(text: Column | str) -> Column:
     """Deterministic document fingerprint = md5 of the normalized text.
     md5 is identical across engines -> DuckDB-oracle-checkable."""
     return F.md5(normalized_text(text))
-
-
-def rolling_hashes(text: Column | str, window: int = 8) -> Column:
-    """Rolling (Rabin-Karp-style) fingerprints: one chained xxhash64 per
-    ``window``-char slide of the normalized text. Returns array<long>;
-    winnow downstream with ``array_min``/sampling for shingle signatures.
-
-    Built like ``shingle_hashes`` — a zip_with chain over shifted
-    per-char hash arrays, so arrays only appear as HOF arguments. The
-    earlier ``transform(sequence, i -> xxhash64(t.substr(i, w)))`` form
-    captured the normalized text inside the lambda and re-normalized it
-    per window position (O(chars²) per row — the same trap fixed in
-    ``word_shingles``)."""
-    t = normalized_text(text)
-    chars = F.split(t, "")
-    n = F.size(chars)
-    h1 = F.transform(chars, lambda c: F.xxhash64(c))
-    h = h1
-    for step in range(1, window):
-        h = F.zip_with(
-            h,
-            F.slice(h1, step + 1, F.greatest(n - step, F.lit(0))),
-            lambda acc, nxt: F.xxhash64(acc, nxt),
-        )
-    valid_len = F.greatest(n - F.lit(window - 1), F.lit(0))
-    return F.when(n >= window, F.slice(h, 1, valid_len)).otherwise(
-        F.array().cast("array<bigint>")
-    )
 
 
 def _token_hash_chain(toks: Column, k: int) -> Column:

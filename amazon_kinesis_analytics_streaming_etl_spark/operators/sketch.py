@@ -248,12 +248,25 @@ def _td_quantile(means, weights, q: float) -> float:
         return float(means[-1])
     i = int(np.searchsorted(cum, target) - 1)
     frac = (target - cum[i]) / (cum[i + 1] - cum[i])
-    # two-sided lerp, then clamp into the bracketing centroids: the
-    # one-sided form a + f*(b-a) cancels catastrophically when |a| >> |b|
-    # (e.g. a=-66, b=-1-6e-15, f=1 rounds to -1.0 > b), which let a
-    # quantile estimate escape the digest's [min, max] envelope
-    val = (1.0 - frac) * means[i] + frac * means[i + 1]
-    return float(min(max(val, means[i]), means[i + 1]))
+    a, b = float(means[i]), float(means[i + 1])
+    return min(max(_lerp(a, b, frac), a), b)
+
+
+def _lerp(a: float, b: float, t: float) -> float:
+    """``a + t*(b-a)`` for ``0 <= t <= 1``, exact at both ends and
+    monotone in ``t`` (the C++20 ``std::lerp`` rules, P0811).
+
+    Neither textbook form has both properties: the one-sided form
+    cancels when |a| >> |b| (a=-66, b=-1-6e-15, t=1 rounds to -1.0 > b),
+    and the two-sided ``(1-t)*a + t*b`` is not monotone when a and b are
+    an ulp apart, so a higher quantile could come out lower."""
+    if (a <= 0.0 <= b) or (b <= 0.0 <= a):
+        # opposite signs: both terms move the same way as t grows
+        return t * b + (1.0 - t) * a
+    if t == 1.0:
+        return b
+    x = a + t * (b - a)
+    return min(x, b) if b > a else max(x, b)
 
 
 def tdigest_partials(

@@ -262,7 +262,11 @@ class Pipeline:
         def write_all(batch: DataFrame, batch_id: int) -> None:
             # One materialization shared by every sink (K8 single-read
             # semantics; the reference reads the source once and fans out,
-            # StreamingEtl.java:106-149).
+            # StreamingEtl.java:106-149). Cached at one partition per core:
+            # the source's partitioning (one per shard) would run every
+            # sink at one small Python task per shard. A narrow coalesce,
+            # and a no-op when cores >= source partitions.
+            batch = batch.coalesce(batch.sparkSession.sparkContext.defaultParallelism)
             batch.persist()
             try:
                 errors: list[str] = []

@@ -61,19 +61,6 @@ TRIP_EVENT_REQUIRED_FIELDS = [
 
 # --- TESTDATA tables (FIXTURES.md §B) ---------------------------------------
 
-TESTDATA_TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
 TESTDATA_SCHEMAS: dict[str, StructType] = {
     "region": StructType(
         [StructField("r_regionkey", IntegerType()), StructField("r_name", StringType())]
@@ -277,23 +264,3 @@ def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(f"{sf_dir}/events.*")
     )
     return _events_ts_to_timestamp(raw)
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, register_views: bool = True
-) -> dict[str, DataFrame]:
-    """Load every TESTDATA parquet table; optionally register temp views.
-
-    Scans are plain ``spark.read.parquet`` so Catalyst keeps predicate
-    pushdown / column pruning; do NOT cache here — callers decide.
-    """
-    out: dict[str, DataFrame] = {}
-    for name in TESTDATA_TABLES:
-        if name == "events":
-            df = load_events(spark, sf_dir)
-        else:
-            df = read_sf_parquet(spark, sf_dir, name)
-        out[name] = df
-        if register_views:
-            df.createOrReplaceTempView(name)
-    return out

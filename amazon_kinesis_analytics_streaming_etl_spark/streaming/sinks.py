@@ -64,6 +64,23 @@ def job_start_prefix(base: str, prefix: str = "", job_start_millis: int | None =
 
 # --- K1/K2: file sink -------------------------------------------------------
 
+def _route_by_partition(events: DataFrame) -> DataFrame:
+    """R1 (keyBy, StreamingEtl.java:110): add the partition columns and
+    hash-route rows on them, so each output dir is written by exactly
+    one task (one file per dir).
+
+    AQE sizes the route by bytes: a micro-batch of a few MB is written
+    by one task, a large backfill by many. One task per core delivered a
+    263-dir batch ~2.5 s sooner on 4 cores, but every task forks a
+    ``chmod`` per file and dir (``_write_routed``), and concurrent forks
+    stretch the time each child shares the JVM's address space before
+    ``exec``. A process-tree memory sample taken then counts the JVM
+    twice; on a 4-core host a quarter of runs peaked that way."""
+    return with_partition_columns(events).repartition(
+        *[F.col(c) for c in PARTITION_COLS]
+    )
+
+
 def write_file_sink_batch(
     events: DataFrame,
     path: str,
@@ -76,7 +93,8 @@ def write_file_sink_batch(
     projection one record per line (K2 — reference encodes via toJson,
     StreamingEtl.java:233).
 
-    The repartition on the partition columns is R1 (reference
+    Rows are routed by the partition columns (``_route_by_partition``)
+    before ``partitionBy``. This is R1 (reference
     ``keyBy(pickupLocationId)``, StreamingEtl.java:110) and is the
     scale-critical move: without it every task writes a file into every
     partition dir (tasks x dirs tiny files); with it each dir is written
@@ -91,26 +109,78 @@ def write_file_sink_batch(
     rolls are inherent — files close at every micro-batch boundary).
     None = one file per dir per batch.
     """
+    _write_routed(events, path, parquet, max_records_per_file, staged=False)
+
+
+#: the one partition column of a staged batch (see ``_write_routed``)
+_STAGED_KEY = "dir"
+
+#: Hadoop options of a staged write: the raw local filesystem, uncached
+#: (the cached instance is the checksummed one). No effect off ``file:``.
+_RAW_LOCAL_FS = {
+    "fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
+    "fs.file.impl.disable.cache": "true",
+}
+
+
+def _write_routed(
+    events: DataFrame,
+    path: str,
+    parquet: bool,
+    max_records_per_file: int | None,
+    staged: bool,
+) -> None:
+    """The routed ``partitionBy`` write behind both batch file sinks.
+
+    ``staged`` writes the staging layout of
+    ``write_file_sink_batch_idempotent``: one dir per output dir, named
+    ``dir=<pickup_location>+<year>+<month>``, through the raw local
+    filesystem. Publish expands the name (``_published_rel_dir``) and
+    drops ``.crc`` sidecars, so the published files are the same.
+
+    Both cut the processes this write forks. Without Hadoop's native
+    library, its local filesystem runs ``chmod`` in a child process for
+    every dir and file it creates, and the checksummed one also creates
+    and chmods a ``.crc`` per file: about five forks per output dir
+    (three nested dirs, file, sidecar) against two staged (dir, file).
+    Each fork blocks the writing task."""
     from ..operators.serialize import trip_event_to_json
 
-    partitioned = with_partition_columns(events).repartition(
-        *[F.col(c) for c in PARTITION_COLS]
-    )
+    partitioned = _route_by_partition(events)
+    cols = PARTITION_COLS
+    if staged:
+        partitioned = partitioned.withColumn(
+            _STAGED_KEY, F.concat_ws("+", *PARTITION_COLS)
+        ).drop(*PARTITION_COLS)
+        cols = [_STAGED_KEY]
     if parquet:
         writer = partitioned.write.mode("append")
     else:
         writer = (
             trip_event_to_json(partitioned)
-            .select("value", *PARTITION_COLS)
+            .select("value", *cols)
             .write.mode("append")
         )
     if max_records_per_file is not None:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer = writer.partitionBy(*PARTITION_COLS)
+    if staged:
+        writer = writer.options(**_RAW_LOCAL_FS)
+    writer = writer.partitionBy(*cols)
     if parquet:
         writer.parquet(path)
     else:
         writer.text(path)
+
+
+def _published_rel_dir(rel_dir: str) -> str:
+    """The output dir, relative to the sink path, of a staged dir:
+    ``dir=001+2018+11`` -> ``pickup_location=001/year=2018/month=11``.
+    A nested dir, as ``write_file_sink_batch`` writes, keeps its path,
+    so a staging in that layout still publishes."""
+    key, _, values = rel_dir.partition("=")
+    if key != _STAGED_KEY:
+        return rel_dir
+    return "/".join(f"{c}={v}" for c, v in zip(PARTITION_COLS, values.split("+")))
 
 
 def _hadoop_fs(df: DataFrame, path: str):
@@ -138,7 +208,8 @@ def write_file_sink_batch_idempotent(
     the write returns but before the batch ledger commits replays the
     whole micro-batch and double-writes. This variant closes it:
 
-    1. **Stage** the batch under ``{path}/_staging/batch-<id>`` —
+    1. **Stage** the batch under ``{path}/_staging/batch-<id>``, one
+       dir per output dir (``_write_routed``) —
        underscore-prefixed, so Spark/Hive readers never see it. An
        incomplete staging (no ``_STAGED`` marker) from a crashed attempt
        is discarded and rewritten.
@@ -163,9 +234,7 @@ def write_file_sink_batch_idempotent(
 
     if not fs.exists(staged_marker):
         fs.delete(HPath(staging), True)  # discard incomplete prior attempt
-        write_file_sink_batch(
-            events, staging, parquet=parquet, max_records_per_file=max_records_per_file
-        )
+        _write_routed(events, staging, parquet, max_records_per_file, staged=True)
         fs.createNewFile(staged_marker)
 
     # publish: move data files (skip _SUCCESS/_STAGED/dot-files) into place.
@@ -196,7 +265,7 @@ def _publish_staged_local(staging: str, path: str) -> None:
     if base.startswith("file:"):
         base = base[len("file:"):]
     for dirpath, _dirs, files in _os.walk(staging_local):
-        rel_dir = _os.path.relpath(dirpath, staging_local)
+        rel_dir = _published_rel_dir(_os.path.relpath(dirpath, staging_local))
         for name in files:
             if name.startswith(("_", ".")):
                 continue
@@ -217,6 +286,9 @@ def _publish_staged_hadoop(jvm, fs, staging: str, path: str) -> None:
         if f.getName().startswith(("_", ".")):
             continue
         rel = fs.makeQualified(f).toUri().getPath()[len(staging_uri) + 1 :]
+        rel_dir, _, name = rel.rpartition("/")
+        if rel_dir:
+            rel = f"{_published_rel_dir(rel_dir)}/{name}"
         dest = HPath(f"{path.rstrip('/')}/{rel}")
         fs.mkdirs(dest.getParent())
         fs.rename(f, dest)
@@ -237,12 +309,7 @@ def file_sink_stream(
     (see ``write_file_sink_batch``)."""
     from ..operators.serialize import trip_event_to_json
 
-    # R1 (keyBy, StreamingEtl.java:110): co-locate each output partition on
-    # one task before partitionBy — otherwise every task writes a file into
-    # every partition dir each micro-batch (tasks x dirs tiny files).
-    partitioned = with_partition_columns(events).repartition(
-        *[F.col(c) for c in PARTITION_COLS]
-    )
+    partitioned = _route_by_partition(events)
     if parquet:
         writer = partitioned.writeStream.format("parquet")
     else:

@@ -177,12 +177,3 @@ def replay_to_memory(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
-
-
-def file_stream(spark: SparkSession, path: str, schema, fmt: str = "parquet", max_files_per_trigger: int | None = None) -> DataFrame:
-    """Bounded file-source stream over existing data (deterministic
-    replay; the test stand-in for Kinesis/Kafka)."""
-    reader = spark.readStream.schema(schema).format(fmt)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(path)

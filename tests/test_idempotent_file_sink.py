@@ -59,6 +59,36 @@ def test_happy_path_publishes_and_cleans_staging(spark, tmp_path):
     assert not os.path.exists(f"{out}/_staging/batch-0")
 
 
+def test_staged_layout_publishes_the_plain_write_layout(spark, tmp_path):
+    # staging is one dir per output dir with no .crc sidecars (fewer
+    # files and dirs for Hadoop to create); publish expands it to the
+    # nested layout, and every file holds what the plain write's holds
+    import pyarrow.parquet as pq
+
+    events = _events(spark, n=12, loc_mod=3)
+    plain, staged = str(tmp_path / "plain"), str(tmp_path / "staged")
+    sk.write_file_sink_batch(events, plain, parquet=True)
+    sk.write_file_sink_batch_idempotent(events, staged, batch_id=0)  # no cleanup
+    staging = f"{staged}/_staging/batch-0"
+    assert sorted(d for d in os.listdir(staging) if os.path.isdir(f"{staging}/{d}")) == [
+        "dir=001+2018+11", "dir=002+2018+11", "dir=003+2018+11"
+    ]
+    assert not glob.glob(f"{staging}/dir=*/.*.crc")
+
+    def by_dir(base):
+        out = {}
+        for f in glob.glob(f"{base}/pickup_location=*/year=*/month=*/*.parquet"):
+            rows = pq.read_table(f).to_pylist()
+            out[os.path.relpath(os.path.dirname(f), base)] = sorted(
+                rows, key=lambda r: r["trip_id"]
+            )
+        return out
+
+    published = by_dir(staged)
+    assert len(published) == 3
+    assert published == by_dir(plain)
+
+
 def test_replay_after_incomplete_staging_rewrites_once(spark, tmp_path):
     # window (a): first attempt died mid-write -> staging has data but no
     # _STAGED marker; replay must discard it, not publish it
@@ -168,7 +198,8 @@ def test_hadoop_publish_path_equivalent_to_local(spark, tmp_path):
     def stage(base):
         staging = os.path.join(base, "_staging", "batch-0")
         for part in ("pickup_location=001/year=2024/month=01",
-                     "pickup_location=002/year=2024/month=02"):
+                     "pickup_location=002/year=2024/month=02",
+                     "dir=003+2024+03"):
             d = os.path.join(staging, part)
             os.makedirs(d)
             with open(os.path.join(d, "part-0000.parquet"), "w") as f:
@@ -198,7 +229,8 @@ def test_hadoop_publish_path_equivalent_to_local(spark, tmp_path):
     _publish_staged_hadoop(jvm, fs, sb, b)
 
     assert published(a) == published(b)
-    assert len(published(a)) == 2  # markers/_SUCCESS never published
+    assert "pickup_location=003/year=2024/month=03/part-0000.parquet" in published(a)
+    assert len(published(a)) == 3  # markers/_SUCCESS never published
     # staging retains only markers after either publish
     for s in (sa, sb):
         left = [f for _, _, fs_ in os.walk(s) for f in fs_]

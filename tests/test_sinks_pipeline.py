@@ -479,3 +479,82 @@ def test_package_main_runs_the_job(spark, tmp_path, valid_event):
     assert rc == 0
     back = spark.read.option("recursiveFileLookup", "true").parquet(str(out))
     assert back.count() == 12
+
+
+def test_fanout_of_many_partition_batch_delivers_each_record_once(
+    spark, tmp_path, valid_event
+):
+    """A batch with more partitions than cores (one per source shard) is
+    cached at one partition per core before the fan-out; every valid
+    record still lands exactly once in the file, kinesis-replay and
+    kafka-replay sinks, and malformed lines land nowhere."""
+    from amazon_kinesis_analytics_streaming_etl_spark.operators.parse import (
+        split_corrupt,
+    )
+    from amazon_kinesis_analytics_streaming_etl_spark.plans.pipeline import (
+        BatchLedger,
+        _sink_specs,
+    )
+    from amazon_kinesis_analytics_streaming_etl_spark.sources.kafka_replay import (
+        register_kafka_replay,
+    )
+    from amazon_kinesis_analytics_streaming_etl_spark.sources.kinesis_replay import (
+        register_kinesis_replay,
+    )
+
+    n = 200
+    lines = [
+        json.dumps(dict(valid_event, trip_id=i, pickup_location_id=1 + i % 37))
+        for i in range(n)
+    ] + ["{not json", '{"trip_id": 5}']
+    raw = spark.createDataFrame([(line,) for line in lines], ["value"])
+    valid, _corrupt = split_corrupt(raw)
+    batch = valid.repartition(16)
+    assert batch.rdd.getNumPartitions() == 16
+
+    out = tmp_path / "out"
+    pipe = Pipeline.from_config(
+        spark,
+        args=[
+            "--InputFilePath", "unused",
+            "--OutputBucket", str(out / "file"),
+            "--ParquetConversion", "true",
+            "--OutputKinesisStream", "trips",
+            "--OutputKinesisReplayDir", str(out / "kinesis"),
+            "--OutputKafkaBootstrapServers", "unused:9092",
+            "--OutputKafkaTopic", "trips",
+            "--OutputKafkaReplayDir", str(out / "kafka"),
+            "--CheckpointLocation", str(tmp_path / "ckpt"),
+        ],
+    )
+    specs = _sink_specs(pipe.cfg)
+    assert [name for name, _ in specs] == ["file", "kinesis", "kafka"]
+    ledger = BatchLedger(str(tmp_path / "ckpt" / "sink_ledger"))
+    pipe._foreach_batch(specs, ledger)(batch, 0)
+
+    expected = list(range(n))
+    file_ids = [
+        r.trip_id
+        for r in spark.read.parquet(*glob.glob(f"{out}/file/job_start=*"))
+        .select("trip_id")
+        .collect()
+    ]
+    assert sorted(file_ids) == expected
+
+    register_kinesis_replay(spark)
+    kin = (
+        spark.read.format("kinesis-replay")
+        .option("path", str(out / "kinesis" / "trips"))
+        .load()
+        .collect()
+    )
+    assert sorted(int(json.loads(bytes(r.data))["trip_id"]) for r in kin) == expected
+
+    register_kafka_replay(spark)
+    kaf = (
+        spark.read.format("kafka-replay")
+        .option("path", str(out / "kafka" / "trips"))
+        .load()
+        .collect()
+    )
+    assert sorted(int(json.loads(bytes(r.value))["trip_id"]) for r in kaf) == expected
